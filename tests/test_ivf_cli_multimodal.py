@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from vectordb_from_scratch_spark.cli import run as cli_run
@@ -100,11 +99,6 @@ def test_multimodal_frame_sampling_one_to_many(documents):
             range(len(doc_frames))
         )
         assert all(len(f.frame_md5) == 32 for f in doc_frames)
-
-
-def test_decode_stub_is_explicit():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_stub(b"\xff\xd8\xff")
 
 
 def test_cli_fragments_verb(spark, tmp_path, capsys):

@@ -59,6 +59,14 @@ def _wav():
     return mm.encode_wav(samples, sample_rate=8000, channels=2, bits=16)
 
 
+def _wav_long():
+    # 200 mono frames: enough for audio_fingerprint's 65-window envelope
+    # and one full frame of wav_vad_segments' default frame_len=160
+    rng = np.random.default_rng(41)
+    samples = rng.integers(-3000, 3000, size=200).tolist()
+    return mm.encode_wav(samples, sample_rate=16000, channels=1, bits=16)
+
+
 def _wav_ulaw():
     rng = np.random.default_rng(31)
     return mm.encode_wav_g711(
@@ -230,7 +238,7 @@ def test_media_resize_stats_dispatch_and_malformed(spark):
 
 
 # every Arrow-batched stats stage; each factory returns a payload its
-# stage decodes. (stage builder, factory, id-bearing output columns)
+# stage decodes. (name, stage builder, factory)
 _ID_COL_STAGES = [
     ("png_pixel_stats", lambda df: mm.png_pixel_stats(df, id_col="img_id"), _png),
     ("jpeg_pixel_stats", lambda df: mm.jpeg_pixel_stats(df, id_col="img_id"), _jpeg_gray),
@@ -243,11 +251,22 @@ _ID_COL_STAGES = [
     ("avi_frame_stats", lambda df: mm.avi_frame_stats(df, id_col="img_id"), _avi),
     ("wav_audio_stats", lambda df: mm.wav_audio_stats(df, id_col="img_id"), _wav),
     ("wav_zcr_stats", lambda df: mm.wav_zcr_stats(df, id_col="img_id"), _wav),
+    ("wav_resample_stats",
+     lambda df: mm.wav_resample_stats(df, id_col="img_id"), _wav),
+    ("wav_vad_segments",
+     lambda df: mm.wav_vad_segments(df, id_col="img_id"), _wav_long),
+    ("image_dhash", lambda df: mm.image_dhash(df, id_col="img_id"), _png),
+    ("audio_fingerprint",
+     lambda df: mm.audio_fingerprint(df, id_col="img_id"), _wav_long),
     ("payload_features", lambda df: mm.payload_features(df, id_col="img_id"), _png),
     ("decode_metadata",
      lambda df: mm.decode_metadata(df, id_col="img_id", decoder="header"), _png),
     ("sample_frames", lambda df: mm.sample_frames(df, id_col="img_id"), _png),
 ]
+
+# stages that process any bytes, so they keep the garbage row; every
+# other stage is decode-or-skip and must drop it
+_KEEPS_UNDECODABLE = {"payload_features", "decode_metadata", "sample_frames"}
 
 
 @pytest.mark.parametrize("name,stage,factory", _ID_COL_STAGES,
@@ -257,12 +276,19 @@ def test_stats_stages_honor_renamed_id_col(spark, name, stage, factory):
     name end-to-end (VERDICT r9 #5): the Arrow assignment is name-based,
     so a stage that hardcodes 'doc_id' against a caller's renamed id
     would either mislabel or fail. The output id column must be named
-    id_col and hold the input ids."""
+    id_col and hold the input ids. A garbage payload (id 79) drops its
+    row from every decode-or-skip stage — never the task."""
     df = spark.createDataFrame(
-        [(77, factory()), (78, factory())], "img_id long, payload binary"
+        [(77, factory()), (78, factory()), (79, b"not a media payload")],
+        "img_id long, payload binary",
     )
     out = stage(df)
     assert "img_id" in out.columns and "doc_id" not in out.columns
     rows = out.collect()
     assert rows, f"{name}: no output rows for a valid payload"
-    assert {r["img_id"] for r in rows} == {77, 78}
+    if name in _KEEPS_UNDECODABLE:
+        assert {r["img_id"] for r in rows} == {77, 78, 79}
+        if name == "decode_metadata":
+            assert [r["media"] for r in rows if r["img_id"] == 79] == [None]
+    else:
+        assert {r["img_id"] for r in rows} == {77, 78}

@@ -220,6 +220,39 @@ def test_persisted_store_survives_writes(spark, tmp_path):
         httpd.server_close()
 
 
+@pytest.mark.parametrize("index", ["ivf_sq8", "srp"])
+def test_persisted_store_keeps_index_after_write(spark, tmp_path, index):
+    """A data_dir-backed server reloads its snapshot after every write;
+    the reload must keep the served store's index mode, or
+    `serve --index ivf_sq8|srp --data-dir` silently turns into exact
+    search after the first POST."""
+    from vectordb_from_scratch_spark.cli import _load, _save
+
+    _save(VectorStore.empty(spark).insert_batch(
+        [(f"v{i}", [float(i), float(i)], {}) for i in range(1, 9)]
+    ), str(tmp_path))
+    store = _load(spark, str(tmp_path), "euclidean")
+    if index == "ivf_sq8":
+        store = store.with_ivf_sq8(n_lists=2, n_probe=2, rerank=10)
+    else:
+        store = store.with_ann(nbits=2, n_tables=1, multiprobe=1)
+    params = store.ann_params
+    state = AppState(store, data_dir=str(tmp_path))
+    httpd = make_server(state)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    try:
+        s, _ = req(base, "POST", "/vectors", {"id": "n1", "vector": [9.0, 9.0]})
+        assert s == 201
+        assert params is not None and state.store.ann_params == params
+        s, body = req(base, "GET", "/health")
+        assert body["vector_count"] == 9
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
 def test_wire_filter_to_spec_nested():
     wire = {"op": "and", "filters": [
         {"op": "eq", "field": "lang", "value": "en"},

@@ -3,7 +3,8 @@ directory — the before/after plan evidence the optimization rounds
 commit under plans/r{N}/.
 
 Usage: python tools/explain_dump.py OUTDIR SUFFIX [--sf DIR] q1 q2 ...
-Writes OUTDIR/<query>_<SUFFIX>.txt per query.
+Writes OUTDIR/<query>_<SUFFIX>.txt per query. Runs at local[$SPARK_GRAFT_CPUS]
+with as many shuffle partitions (default 8), the bench's parallelism.
 """
 
 from __future__ import annotations
@@ -25,10 +26,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("explain_dump")
-        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "12g")
         .config("spark.sql.session.timeZone", "UTC")

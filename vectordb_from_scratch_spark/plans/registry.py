@@ -7181,6 +7181,114 @@ def _q_multimodal_header(spark, sf_dir):
     )
 
 
+# --------------------------------------------------------------------------
+# In-plan media fixtures: each multimodal query synthesizes its payloads
+# from doc_ids with one Arrow-batched map, then decodes them back; the
+# oracle recomputes the same deterministic pattern analytically.
+# --------------------------------------------------------------------------
+
+
+def _synth_payloads(d: DataFrame, make) -> DataFrame:
+    """(doc_id, payload) rows from the already-filtered doc frame `d`
+    (spread or not — the caller's choice), payload = make(doc_id) bytes.
+    Makers are closures (inline or from the factories below), so they
+    ship to the Python workers by value, not as an import of this
+    module."""
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            payloads = [make(int(i)) for i in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return d.mapInPandas(synth, schema="doc_id long, payload binary")
+
+
+def _pcm_wav(rates: list[int], bits: int):
+    """PCM WAV maker: 1-2 channels, 50-86 frames, sample
+    ((i*131 + f*step + ch*59) mod 2^bits) - 2^(bits-1), rate rates[i % 3]."""
+    from ..operators.multimodal import encode_wav
+
+    step, full, half = {16: 17, 24: 8191}[bits], 1 << bits, 1 << (bits - 1)
+
+    def make(i):
+        nch, nframes = 1 + i % 2, 50 + i % 37
+        samples = [
+            ((i * 131 + f * step + ch * 59) % full) - half
+            for f in range(nframes) for ch in range(nch)
+        ]
+        return encode_wav(samples, rates[i % 3], nch, bits=bits)
+
+    return make
+
+
+def _g711_wav(rates: list[int], law: str):
+    """G.711 WAV maker: code (i*7 + f*13 + ch*29) mod 256, same channel,
+    frame and rate layout as _pcm_wav."""
+    from ..operators.multimodal import encode_wav_g711
+
+    def make(i):
+        nch, nframes = 1 + i % 2, 50 + i % 37
+        codes = [
+            (i * 7 + f * 13 + ch * 29) % 256
+            for f in range(nframes) for ch in range(nch)
+        ]
+        return encode_wav_g711(codes, rates[i % 3], nch, law=law)
+
+    return make
+
+
+def _rgb_bmp():
+    """BMP maker: (3..10)x(2..7) RGB, pixel (i*13 + y*7 + x*3 + ch*101) mod 256."""
+    from ..operators.multimodal import encode_bmp
+
+    def make(i):
+        w, h = 3 + i % 8, 2 + (i * 5) % 6
+        rgb = bytes(
+            (i * 13 + y * 7 + x * 3 + ch * 101) % 256
+            for y in range(h) for x in range(w) for ch in range(3)
+        )
+        return encode_bmp(rgb, w, h)
+
+    return make
+
+
+def _palette_gif():
+    """GIF maker (i, w, h): 8-color palette keyed on i, index
+    (i + 5y + 7x) mod 8."""
+    from ..operators.multimodal import encode_gif
+
+    def make(i, w, h):
+        pal = [
+            ((17 * k + i) % 256, (31 * k + 2 * i) % 256, (53 * k + 3 * i) % 256)
+            for k in range(8)
+        ]
+        idx = bytes((i + 5 * y + 7 * x) % 8 for y in range(h) for x in range(w))
+        return encode_gif(idx, w, h, pal)
+
+    return make
+
+
+def _mjpeg_avi():
+    """AVI-MJPEG maker: 2-4 grayscale 8/16-px frames of 8x8 blocks."""
+    from ..operators.multimodal import encode_avi_mjpeg, encode_jpeg_gray
+
+    def make(i):
+        nf = 2 + i % 3
+        w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
+        frames = [
+            encode_jpeg_gray(bytes(
+                (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
+                for y in range(h) for x in range(w)
+            ), w, h)
+            for f in range(nf)
+        ]
+        return encode_avi_mjpeg(frames, w, h)
+
+    return make
+
+
 @_register(
     "multimodal_png_pixel_stats",
     """
@@ -7228,23 +7336,15 @@ def _q_multimodal_png_pixels(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
+        px = bytes(
+            (i * 31 + r * 7 + c * 13 + k * 97) % 256
+            for r in range(h) for c in range(w) for k in range(ch)
+        )
+        return encode_png(px, w, h, ch)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
-                px = bytes(
-                    (i * 31 + r * 7 + c * 13 + k * 97) % 256
-                    for r in range(h) for c in range(w) for k in range(ch)
-                )
-                payloads.append(encode_png(px, w, h, ch))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return png_pixel_stats(payloads)
+    return png_pixel_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -7287,23 +7387,15 @@ def _q_multimodal_png_interlaced(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
+        px = bytes(
+            (i * 43 + r * 11 + c * 17 + k * 89) % 256
+            for r in range(h) for c in range(w) for k in range(ch)
+        )
+        return encode_png(px, w, h, ch, interlace=True)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
-                px = bytes(
-                    (i * 43 + r * 11 + c * 17 + k * 89) % 256
-                    for r in range(h) for c in range(w) for k in range(ch)
-                )
-                payloads.append(encode_png(px, w, h, ch, interlace=True))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return png_pixel_stats(payloads)
+    return png_pixel_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -7349,24 +7441,15 @@ def _q_multimodal_png_16bit(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 37 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
+        px = b"".join(
+            int((i * 53 + r * 7 + c * 13 + k * 97) % 65536).to_bytes(2, "big")
+            for r in range(h) for c in range(w) for k in range(ch)
+        )
+        return encode_png(px, w, h, ch, bit_depth=16)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, ch = 4 + i % 13, 4 + (i * 3) % 11, [1, 3, 2, 4][i % 4]
-                px = b"".join(
-                    int((i * 53 + r * 7 + c * 13 + k * 97) % 65536)
-                    .to_bytes(2, "big")
-                    for r in range(h) for c in range(w) for k in range(ch)
-                )
-                payloads.append(encode_png(px, w, h, ch, bit_depth=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return png_pixel_stats(payloads)
+    return png_pixel_stats(_synth_payloads(spread(d), make))
 
 
 _SCD2_SQL = """
@@ -7784,28 +7867,12 @@ def _q_knn_facets(spark, sf_dir):
     "images. Value-exact",
 )
 def _q_multimodal_wav_stats(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_audio_stats
+    from ..operators.multimodal import wav_audio_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 16000, 44100][i % 3]
-                samples = [
-                    ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
-                    for f in range(nframes) for ch in range(nch)
-                ]
-                payloads.append(encode_wav(samples, rate, nch, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return wav_audio_stats(payloads)
+    make = _pcm_wav([8000, 16000, 44100], bits=16)
+    return wav_audio_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -7847,28 +7914,12 @@ def _q_multimodal_wav_stats(spark, sf_dir):
     "Value-exact",
 )
 def _q_multimodal_wav_zcr(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_zcr_stats
+    from ..operators.multimodal import wav_zcr_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 16000, 44100][i % 3]
-                samples = [
-                    ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
-                    for f in range(nframes) for ch in range(nch)
-                ]
-                payloads.append(encode_wav(samples, rate, nch, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return wav_zcr_stats(payloads)
+    make = _pcm_wav([8000, 16000, 44100], bits=16)
+    return wav_zcr_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -7906,28 +7957,12 @@ def _q_multimodal_wav_zcr(spark, sf_dir):
     "±2^23 range; the oracle recomputes it analytically. Value-exact",
 )
 def _q_multimodal_wav24_stats(spark, sf_dir):
-    from ..operators.multimodal import encode_wav, wav_audio_stats
+    from ..operators.multimodal import wav_audio_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 22050, 48000][i % 3]
-                samples = [
-                    ((i * 131 + f * 8191 + ch * 59) % 16777216) - 8388608
-                    for f in range(nframes) for ch in range(nch)
-                ]
-                payloads.append(encode_wav(samples, rate, nch, bits=24))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return wav_audio_stats(payloads)
+    make = _pcm_wav([8000, 22050, 48000], bits=24)
+    return wav_audio_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -8004,30 +8039,19 @@ def _q_multimodal_wav_adpcm_stats(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        nch, nnib = 1 + i % 2, 8 * (3 + i % 5)
+        blk = {
+            "pred": [((i * 131 + ch * 59) % 65536) - 32768 for ch in range(nch)],
+            "idx": [(i * 7 + ch * 13) % 89 for ch in range(nch)],
+            "nibbles": [
+                [(i * 13 + ch * 5 + p * 11) % 16 for p in range(nnib)]
+                for ch in range(nch)
+            ],
+        }
+        return encode_wav_ima_adpcm([blk], [8000, 16000, 44100][i % 3], nch)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch = 1 + i % 2
-                nnib = 8 * (3 + i % 5)
-                rate = [8000, 16000, 44100][i % 3]
-                blk = {
-                    "pred": [((i * 131 + ch * 59) % 65536) - 32768
-                             for ch in range(nch)],
-                    "idx": [(i * 7 + ch * 13) % 89 for ch in range(nch)],
-                    "nibbles": [
-                        [(i * 13 + ch * 5 + p * 11) % 16 for p in range(nnib)]
-                        for ch in range(nch)
-                    ],
-                }
-                payloads.append(encode_wav_ima_adpcm([blk], rate, nch))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return wav_audio_stats(payloads)
+    return wav_audio_stats(_synth_payloads(spread(d), make))
 
 
 def _g711_sql(law: str) -> str:
@@ -8080,7 +8104,7 @@ def _g711_sql(law: str) -> str:
 
 def _q_g711(law: str):
     def q(spark, sf_dir):
-        from ..operators.multimodal import encode_wav_g711, wav_audio_stats
+        from ..operators.multimodal import wav_audio_stats
 
         d = (
             _t(spark, sf_dir, "documents")
@@ -8088,24 +8112,8 @@ def _q_g711(law: str):
             .select("doc_id")
         )
 
-        def synth(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                payloads = []
-                for doc_id in pdf["doc_id"]:
-                    i = int(doc_id)
-                    nch, nframes = 1 + i % 2, 50 + i % 37
-                    rate = [8000, 16000, 11025][i % 3]
-                    codes = [
-                        (i * 7 + f * 13 + ch * 29) % 256
-                        for f in range(nframes) for ch in range(nch)
-                    ]
-                    payloads.append(encode_wav_g711(codes, rate, nch, law=law))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-        payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-        return wav_audio_stats(payloads)
+        make = _g711_wav([8000, 16000, 11025], law)
+        return wav_audio_stats(_synth_payloads(spread(d), make))
 
     return q
 
@@ -8216,48 +8224,16 @@ def _audio_normalize_sql() -> str:
     "per codec. No shuffle anywhere. Value-exact",
 )
 def _q_multimodal_audio_normalize(spark, sf_dir):
-    from ..operators.multimodal import (
-        encode_wav,
-        encode_wav_g711,
-        wav_resample_stats,
-    )
+    from ..operators.multimodal import wav_resample_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nch, nframes = 1 + i % 2, 50 + i % 37
-                rate = [8000, 16000, 44100][i % 3]
-                fam = i % 4
-                if fam in (0, 2):
-                    if fam == 0:
-                        samples = [
-                            ((i * 131 + f * 17 + ch * 59) % 65536) - 32768
-                            for f in range(nframes) for ch in range(nch)
-                        ]
-                        payloads.append(encode_wav(samples, rate, nch, bits=16))
-                    else:
-                        samples = [
-                            ((i * 131 + f * 8191 + ch * 59) % 16777216) - 8388608
-                            for f in range(nframes) for ch in range(nch)
-                        ]
-                        payloads.append(encode_wav(samples, rate, nch, bits=24))
-                else:
-                    codes = [
-                        (i * 7 + f * 13 + ch * 29) % 256
-                        for f in range(nframes) for ch in range(nch)
-                    ]
-                    payloads.append(encode_wav_g711(
-                        codes, rate, nch, law="ulaw" if fam == 1 else "alaw"
-                    ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    rates = [8000, 16000, 44100]
+    families = [  # i % 4 picks the codec
+        _pcm_wav(rates, bits=16), _g711_wav(rates, "ulaw"),
+        _pcm_wav(rates, bits=24), _g711_wav(rates, "alaw"),
+    ]
+    payloads = _synth_payloads(spread(d), lambda i: families[i % 4](i))
     return wav_resample_stats(payloads, target_rate=16000)
 
 
@@ -8316,23 +8292,16 @@ def _q_multimodal_audio_vad(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        nf, blk = 20 + i % 7, 3 + i % 3
+        samples = [
+            (((i * 131 + s * 17) % 256) - 128)
+            * (40 if ((s // 10) // blk) % 2 == 0 else 0)
+            for s in range(nf * 10)
+        ]
+        return encode_wav(samples, 16000, 1, bits=16)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf, blk = 20 + i % 7, 3 + i % 3
-                samples = [
-                    (((i * 131 + s * 17) % 256) - 128)
-                    * (40 if ((s // 10) // blk) % 2 == 0 else 0)
-                    for s in range(nf * 10)
-                ]
-                payloads.append(encode_wav(samples, 16000, 1, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = _synth_payloads(spread(d), make)
     return wav_vad_segments(payloads, frame_len=10, threshold=1)
 
 
@@ -8408,31 +8377,25 @@ def _q_multimodal_image_neardup(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
+    def make(i):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                j = i // 5
-                fam, v = j // 4, j % 4
-                w, h = 12 + fam % 7, 10 + (fam * 3) % 5
-                rr, cc = np.ogrid[0:h, 0:w]
-                p = (fam * 37 + rr * 11 + cc * 17) % 250
-                p = np.broadcast_to(p, (h, w)).copy()
-                pc = (8 * w) // 9  # the one pixel grid cell (0,8) samples
-                p[0, pc] = min(249, int(p[0, pc]) + 50 * v)
-                px = np.stack([p, p + 3, p + 6], axis=2).astype(np.uint8)
-                payloads.append(encode_bmp(px.tobytes(), w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+        j = i // 5
+        fam, v = j // 4, j % 4
+        w, h = 12 + fam % 7, 10 + (fam * 3) % 5
+        rr, cc = np.ogrid[0:h, 0:w]
+        p = (fam * 37 + rr * 11 + cc * 17) % 250
+        p = np.broadcast_to(p, (h, w)).copy()
+        pc = (8 * w) // 9  # the one pixel grid cell (0,8) samples
+        p[0, pc] = min(249, int(p[0, pc]) + 50 * v)
+        px = np.stack([p, p + 3, p + 6], axis=2).astype(np.uint8)
+        return encode_bmp(px.tobytes(), w, h)
 
     # NOT spread (r11 A/B): these tiny fixtures feed a banded self-join
     # that duplicates the Python synth+fingerprint subtree on both sides;
     # 32-way spread turned ~1k cheap payloads into 64 task launches and
     # LOST 0.9->4.5s. At scale the scan arrives pre-split either way.
-    payloads = d.mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = _synth_payloads(d, make)
     return image_neardup_pairs(payloads, max_hamming=3).select(
         F.col("id_a"), F.col("id_b"), F.col("hamming")
     )
@@ -8502,26 +8465,19 @@ def _q_multimodal_audio_neardup(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                j = i // 5
-                fam, v = j // 4, j % 4
-                n = 130 + (fam % 7) * 13
-                samples = [
-                    (((fam * 131 + s * 17) % 256) - 128)
-                    * ((1 + v) if (s * 65) // n == 64 else 1)
-                    for s in range(n)
-                ]
-                payloads.append(encode_wav(samples, 16000, 1, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def make(i):
+        j = i // 5
+        fam, v = j // 4, j % 4
+        n = 130 + (fam % 7) * 13
+        samples = [
+            (((fam * 131 + s * 17) % 256) - 128)
+            * ((1 + v) if (s * 65) // n == 64 else 1)
+            for s in range(n)
+        ]
+        return encode_wav(samples, 16000, 1, bits=16)
 
     # NOT spread — same banded-self-join A/B as image_neardup above (r11)
-    payloads = d.mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = _synth_payloads(d, make)
     return audio_neardup_pairs(payloads, max_hamming=3).select(
         "id_a", "id_b", "hamming"
     )
@@ -8572,24 +8528,15 @@ def _q_multimodal_jpeg_pixels(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h = 8 * (1 + i % 3), 8 * (1 + (i * 2) % 3)
+        px = bytes(
+            (i * 37 + (y // 8) * 11 + (x // 8) * 23) % 256
+            for y in range(h) for x in range(w)
+        )
+        return encode_jpeg_gray(px, w, h)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + (i * 2) % 3
-                w, h = 8 * bw, 8 * bh
-                px = bytes(
-                    (i * 37 + (y // 8) * 11 + (x // 8) * 23) % 256
-                    for y in range(h) for x in range(w)
-                )
-                payloads.append(encode_jpeg_gray(px, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return jpeg_pixel_stats(payloads)
+    return jpeg_pixel_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -8636,24 +8583,15 @@ def _q_multimodal_jpeg_progressive(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 29 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h = 8 * (1 + i % 3), 8 * (1 + (i * 2) % 3)
+        px = bytes(
+            (i * 41 + (y // 8) * 19 + (x // 8) * 29) % 256
+            for y in range(h) for x in range(w)
+        )
+        return encode_jpeg_progressive(px, w, h)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                bw, bh = 1 + i % 3, 1 + (i * 2) % 3
-                w, h = 8 * bw, 8 * bh
-                px = bytes(
-                    (i * 41 + (y // 8) * 19 + (x // 8) * 29) % 256
-                    for y in range(h) for x in range(w)
-                )
-                payloads.append(encode_jpeg_progressive(px, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return jpeg_pixel_stats(payloads)
+    return jpeg_pixel_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -8702,28 +8640,17 @@ def _q_multimodal_jpeg_color(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h = 16 * (1 + i % 2), 16 * (1 + (i * 3) % 2)
+        rgb = bytes(
+            v
+            for y in range(h)
+            for x in range(w)
+            for v in ((i * 53 + (y // 16) * 19 + (x // 16) * 29) % 256,) * 3
+        )
+        return encode_jpeg(rgb, w, h, channels=3, sampling=(2, 2))
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                mw, mh = 1 + i % 2, 1 + (i * 3) % 2
-                w, h = 16 * mw, 16 * mh
-                rgb = bytes(
-                    v
-                    for y in range(h)
-                    for x in range(w)
-                    for v in ((i * 53 + (y // 16) * 19 + (x // 16) * 29) % 256,) * 3
-                )
-                payloads.append(
-                    encode_jpeg(rgb, w, h, channels=3, sampling=(2, 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return jpeg_pixel_stats(payloads)
+    return jpeg_pixel_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -8766,30 +8693,14 @@ def _q_multimodal_jpeg_color(spark, sf_dir):
     "construction. Value-exact",
 )
 def _q_multimodal_gif_pixels(spark, sf_dir):
-    from ..operators.multimodal import encode_gif, gif_pixel_stats
+    from ..operators.multimodal import gif_pixel_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 13 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 5 + i % 9, 4 + (i * 3) % 7
-                pal = [
-                    ((17 * k + i) % 256, (31 * k + 2 * i) % 256,
-                     (53 * k + 3 * i) % 256)
-                    for k in range(8)
-                ]
-                idx = bytes(
-                    (i + 5 * y + 7 * x) % 8 for y in range(h) for x in range(w)
-                )
-                payloads.append(encode_gif(idx, w, h, pal))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    gif = _palette_gif()
+    payloads = _synth_payloads(
+        spread(d), lambda i: gif(i, 5 + i % 9, 4 + (i * 3) % 7)
+    )
     return gif_pixel_stats(payloads)
 
 
@@ -8825,27 +8736,11 @@ def _q_multimodal_gif_pixels(spark, sf_dir):
     "parse_image_header recognizes. Value-exact",
 )
 def _q_multimodal_bmp_pixels(spark, sf_dir):
-    from ..operators.multimodal import bmp_pixel_stats, encode_bmp
+    from ..operators.multimodal import bmp_pixel_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 8, 2 + (i * 5) % 6
-                rgb = bytes(
-                    (i * 13 + y * 7 + x * 3 + ch * 101) % 256
-                    for y in range(h) for x in range(w) for ch in range(3)
-                )
-                payloads.append(encode_bmp(rgb, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return bmp_pixel_stats(payloads)
+    return bmp_pixel_stats(_synth_payloads(spread(d), _rgb_bmp()))
 
 
 @_register(
@@ -8879,26 +8774,11 @@ def _q_multimodal_bmp_pixels(spark, sf_dir):
     "(operators/multimodal.py:resize_nearest). Value-exact",
 )
 def _q_multimodal_resize(spark, sf_dir):
-    from ..operators.multimodal import bmp_resize_stats, encode_bmp
+    from ..operators.multimodal import bmp_resize_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 19 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 8, 2 + (i * 5) % 6
-                rgb = bytes(
-                    (i * 13 + y * 7 + x * 3 + ch * 101) % 256
-                    for y in range(h) for x in range(w) for ch in range(3)
-                )
-                payloads.append(encode_bmp(rgb, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = _synth_payloads(spread(d), _rgb_bmp())
     return bmp_resize_stats(payloads, out_w=8, out_h=6)
 
 
@@ -8951,49 +8831,25 @@ def _q_multimodal_resize(spark, sf_dir):
     "format. Value-exact",
 )
 def _q_multimodal_media_resize(spark, sf_dir):
-    from ..operators.multimodal import (
-        encode_bmp,
-        encode_gif,
-        encode_png,
-        media_resize_stats,
-    )
+    from ..operators.multimodal import encode_png, media_resize_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 23 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    bmp, gif = _rgb_bmp(), _palette_gif()
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 3 + i % 8, 2 + (i * 5) % 6
-                if i % 3 == 0:
-                    rgb = bytes(
-                        (i * 13 + y * 7 + x * 3 + ch * 101) % 256
-                        for y in range(h) for x in range(w) for ch in range(3)
-                    )
-                    payloads.append(encode_bmp(rgb, w, h))
-                elif i % 3 == 1:
-                    pal = [
-                        ((17 * k + i) % 256, (31 * k + 2 * i) % 256,
-                         (53 * k + 3 * i) % 256)
-                        for k in range(8)
-                    ]
-                    idx = bytes(
-                        (i + 5 * y + 7 * x) % 8
-                        for y in range(h) for x in range(w)
-                    )
-                    payloads.append(encode_gif(idx, w, h, pal))
-                else:
-                    rgb = bytes(
-                        (i * 11 + y * 5 + x * 2 + ch * 97) % 256
-                        for y in range(h) for x in range(w) for ch in range(3)
-                    )
-                    payloads.append(encode_png(rgb, w, h, 3))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def make(i):  # i % 3 picks BMP / GIF / PNG
+        w, h = 3 + i % 8, 2 + (i * 5) % 6
+        if i % 3 == 0:
+            return bmp(i)
+        if i % 3 == 1:
+            return gif(i, w, h)
+        rgb = bytes(
+            (i * 11 + y * 5 + x * 2 + ch * 97) % 256
+            for y in range(h) for x in range(w) for ch in range(3)
+        )
+        return encode_png(rgb, w, h, 3)
 
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = _synth_payloads(spread(d), make)
     return media_resize_stats(payloads, out_w=8, out_h=6)
 
 
@@ -9091,35 +8947,11 @@ def _q_drift_chisq(spark, sf_dir):
     "ladder to ffmpeg behind the same mapInPandas seam. Value-exact",
 )
 def _q_multimodal_video_frames(spark, sf_dir):
-    from ..operators.multimodal import (
-        avi_frame_stats,
-        encode_avi_mjpeg,
-        encode_jpeg_gray,
-    )
+    from ..operators.multimodal import avi_frame_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 19 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 2 + i % 3
-                w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
-                frames = []
-                for f in range(nf):
-                    px = bytes(
-                        (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
-                        for y in range(h) for x in range(w)
-                    )
-                    frames.append(encode_jpeg_gray(px, w, h))
-                payloads.append(encode_avi_mjpeg(frames, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return avi_frame_stats(payloads)
+    return avi_frame_stats(_synth_payloads(spread(d), _mjpeg_avi()))
 
 
 @_register(
@@ -9168,25 +9000,18 @@ def _q_multimodal_video_rawdib(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 41 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
+    def make(i):
+        w, h, nf = 3 + i % 5, 2 + (i * 7) % 4, 1 + i % 3
+        frames = [
+            bytes(
+                (i * 29 + f * 37 + y * 11 + x * 5 + k * 71) % 256
+                for y in range(h) for x in range(w) for k in range(3)
+            )
+            for f in range(nf)
+        ]
+        return encode_avi_rawdib(frames, w, h)
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, nf = 3 + i % 5, 2 + (i * 7) % 4, 1 + i % 3
-                frames = []
-                for f in range(nf):
-                    frames.append(bytes(
-                        (i * 29 + f * 37 + y * 11 + x * 5 + k * 71) % 256
-                        for y in range(h) for x in range(w) for k in range(3)
-                    ))
-                payloads.append(encode_avi_rawdib(frames, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
-    return avi_frame_stats(payloads)
+    return avi_frame_stats(_synth_payloads(spread(d), make))
 
 
 @_register(
@@ -9230,34 +9055,11 @@ def _q_multimodal_video_rawdib(spark, sf_dir):
     "form in SQL integer arithmetic, so the oracle is value-exact.",
 )
 def _q_multimodal_video_resize(spark, sf_dir):
-    from ..operators.multimodal import (
-        encode_avi_mjpeg,
-        encode_jpeg_gray,
-        media_resize_stats,
-    )
+    from ..operators.multimodal import media_resize_stats
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 19 == 0).select("doc_id")
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 2 + i % 3
-                w, h = 8 * (1 + i % 2), 8 * (1 + (i * 3) % 2)
-                frames = []
-                for f in range(nf):
-                    px = bytes(
-                        (i * 23 + f * 41 + (y // 8) * 13 + (x // 8) * 17) % 256
-                        for y in range(h) for x in range(w)
-                    )
-                    frames.append(encode_jpeg_gray(px, w, h))
-                payloads.append(encode_avi_mjpeg(frames, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = spread(d).mapInPandas(synth, schema="doc_id long, payload binary")
+    payloads = _synth_payloads(spread(d), _mjpeg_avi())
     return media_resize_stats(payloads, out_w=8, out_h=6)
 
 

@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import json
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from time import monotonic
 from urllib.parse import unquote
@@ -152,8 +152,11 @@ class AppState:
             # re-load from the snapshot just written: new_store's lazy plan
             # still scans the PREVIOUS snapshot's part files, which _save's
             # rename-overwrite just deleted — serving it would throw
-            # FileNotFoundException on the next evaluation
-            new_store = _load(new_store.spark, self.data_dir, new_store.metric)
+            # FileNotFoundException on the next evaluation. Only the rows
+            # are swapped: the index mode (ann_params) and the rest of the
+            # store's fields carry over.
+            reloaded = _load(new_store.spark, self.data_dir, new_store.metric)
+            new_store = replace(new_store, df=reloaded.df)
         self.store = new_store
 
 
