@@ -1,7 +1,8 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value" (total sec), "unit", "queries" (per-query
-sec), "sf"}.
+(default: the sf0.1 test tables) in the engine's session (session.py:
+$SPARK_GRAFT_CPUS cores, default nproc) and prints ONE JSON line last:
+{"metric", "value" (total sec), "unit", "queries" (per-query sec), "cpus",
+"sf"}.
 
 Queries execute into the `noop` sink so the full physical plan runs
 JVM-side (count() alone would let Catalyst prune compute; collect() would
@@ -18,7 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # Headline set: one per operator category (kNN exact/ANN, dedup, text,
 # relational joins/aggs/windows, sessionization, fold).
@@ -173,7 +173,7 @@ def _box_fingerprint() -> dict:
     }
 
 
-def _prev_round_reference() -> dict[str, float]:
+def _prev_round_reference(cpus: int) -> dict[str, float]:
     """Per-query seconds from the newest BENCH_r*.json next to this file
     (the driver's own prior-round artifact). Used ONLY to flag >1.5×
     slowdowns for an isolated re-run — never to skip or alter work.
@@ -194,7 +194,7 @@ def _prev_round_reference() -> dict[str, float]:
             with open(path) as fh:
                 doc = json.load(fh)
             ref_cpus = doc.get("cpus")
-            if ref_cpus is not None and str(ref_cpus) != str(CPUS):
+            if ref_cpus is not None and str(ref_cpus) != str(cpus):
                 continue
             queries = (doc.get("parsed") or {}).get("queries") or {}
             ref = {n: t for n, t in queries.items() if isinstance(t, (int, float))}
@@ -206,49 +206,44 @@ def _prev_round_reference() -> dict[str, float]:
     return best[1]
 
 
-def main() -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("vectordb_from_scratch_spark_bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from vectordb_from_scratch_spark.plans.registry import QUERIES
+def warm_tables(spark, sf_dir: str) -> None:
+    """Warm outside timing: JVM/codegen once, and every table's file +
+    footer so cold reads don't land on whichever query runs first."""
     from vectordb_from_scratch_spark.sources import TABLES, load_table
 
-    # Warm outside timing: JVM/codegen once, and every table's file +
-    # footer so cold reads don't land on whichever query runs first.
     for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
+        load_table(spark, sf_dir, t).count()
 
+
+def release(spark) -> None:
+    """Drop the persisted AND localCheckpointed intermediates a query left
+    (even a failed one), so repeats measure the full plan and leaked
+    checkpoint blocks cannot spike later queries (2-5× in r4). The global
+    sweep is safe because the session is dedicated to the harness."""
     from vectordb_from_scratch_spark.operators import cache, dedup
 
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        try:
-            QUERIES[name].spark(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        finally:
-            # composed pipelines persist/localCheckpoint intermediates;
-            # drop BOTH between runs (even failed ones) so repeats measure
-            # the full plan and storage never accumulates. The sweep is
-            # what release_caches can't do: checkpoint blocks (graph/CC/
-            # MMR/BPE queries) leaked across the r4 session and spiked
-            # unrelated queries 2-5× via block-manager pressure.
-            dedup.release_caches()
-            # all_rdds: this session is dedicated to the bench, so the
-            # global sweep is safe here and keeps r5's decontamination
-            # guarantee even for blocks that bypassed the tracked path
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
-        return time.perf_counter() - t0
+    dedup.release_caches()
+    cache.sweep_persistent_rdds(spark, all_rdds=True)
+
+
+def run_once(spark, sf_dir: str, name: str) -> float:
+    """Wall seconds of one registry query into the noop sink."""
+    from vectordb_from_scratch_spark.plans.registry import QUERIES
+
+    t0 = time.perf_counter()
+    try:
+        QUERIES[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        release(spark)
+    return time.perf_counter() - t0
+
+
+def main() -> None:
+    from vectordb_from_scratch_spark.session import build_session, resolved_cpus
+
+    spark = build_session("vectordb_from_scratch_spark_bench")
+    cpus = resolved_cpus()
+    warm_tables(spark, SF_DIR)
 
     def run_triangles_split() -> tuple[float, float]:
         """graph_triangles timed in two attributable phases (VERDICT r10
@@ -276,8 +271,7 @@ def main() -> None:
         finally:
             if edges is not None:
                 edges.unpersist()
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
+            release(spark)
 
     # min of repeated runs per query: single-shot timings on a shared box
     # are noisy (GC, co-tenants — observed 10× spikes on a 1.2 s query);
@@ -308,9 +302,9 @@ def main() -> None:
                 print(f"bench: {name} failed: {exc}", file=sys.stderr)
             continue
         try:
-            runs = [run_once(name), run_once(name)]
+            runs = [run_once(spark, SF_DIR, name), run_once(spark, SF_DIR, name)]
             if name in DIAG_QUERIES or abs(runs[0] - runs[1]) > 0.2 * min(runs):
-                runs.append(run_once(name))
+                runs.append(run_once(spark, SF_DIR, name))
             samples[name] = [round(t, 3) for t in runs]
             timings[name] = round(min(runs), 3)
         except Exception as exc:  # noqa: BLE001 — isolate per query
@@ -325,7 +319,7 @@ def main() -> None:
     # mechanically separates "the box spiked during this query's slot"
     # from "the plan regressed" — a rerun that lands back at the old time
     # is box drift, one that repeats the slow time is real.
-    reference = _prev_round_reference()
+    reference = _prev_round_reference(cpus)
     reruns: dict[str, float] = {}
     for name in BENCH_QUERIES:
         t = timings.get(name)
@@ -340,7 +334,7 @@ def main() -> None:
                     splits[name] = {"build": round(b, 3), "count": round(c, 3)}
                 samples.setdefault(name, []).append([round(b, 3), round(c, 3)])
             else:
-                rerun_t = run_once(name)
+                rerun_t = run_once(spark, SF_DIR, name)
                 samples.setdefault(name, []).append(round(rerun_t, 3))
             reruns[name] = round(rerun_t, 3)
             timings[name] = round(min(t, rerun_t), 3)
@@ -395,6 +389,7 @@ def main() -> None:
                 "splits": splits,
                 "reruns": reruns,
                 "box": box,
+                "cpus": cpus,
                 "sf": sf_val,
                 "n_ok": len(numeric),
                 "n_err": len(timings) - len(numeric),

@@ -13,23 +13,14 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
-
     import tempfile
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("vectordb_from_scratch_spark_tests")
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark_wh_"))
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    from vectordb_from_scratch_spark.session import build_session
+
+    return build_session(
+        "vectordb_from_scratch_spark_tests",
+        {"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark_wh_")},
     )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
 
 
 @pytest.fixture(scope="session")

@@ -314,3 +314,38 @@ def test_knn_hamming_rerank_requires_raw(embeddings):
     staged, probes = _bq_fixture(embeddings)
     with pytest.raises(ValueError, match="raw"):
         knn.knn_hamming(staged, probes, k=3, rerank=10)
+
+
+@pytest.mark.parametrize(
+    "op", ["knn", "radius_search", "maxsim_search", "knn_hamming"]
+)
+def test_empty_probe_set_returns_window_result(spark, embeddings, op):
+    # no numpy kernel can be built over zero probes: every numpy dispatch
+    # must fall back to the window path's (empty) result, not raise
+    none = F.lit(False)
+    if op == "knn_hamming":
+        staged, probes = _bq_fixture(embeddings)
+
+        def run(strategy):
+            return knn.knn_hamming(staged, probes.filter(none), k=3, strategy=strategy)
+    elif op == "maxsim_search":
+        doc_vecs, query_vecs = _maxsim_fixture(spark)
+
+        def run(strategy):
+            return knn.maxsim_search(
+                doc_vecs, query_vecs.filter(none), k=3, strategy=strategy
+            )
+    else:
+        probes = embeddings.filter(none).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_embedding"),
+        )
+        kwargs = {"k": 3} if op == "knn" else {"radius": 1.3}
+
+        def run(strategy):
+            return getattr(knn, op)(embeddings, probes, strategy=strategy, **kwargs)
+
+    window = run("window")
+    numpy = run("numpy")
+    assert numpy.columns == window.columns
+    assert numpy.collect() == window.collect() == []

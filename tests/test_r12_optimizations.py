@@ -10,7 +10,8 @@ Covers (OPTIMIZATION_r12.md):
      rank-exact)
   2. ann.build_ivf_det / pq.pq_codebook per-round checkpoints ≡ the
      unmaterialized loop (a localCheckpoint is a pure materialization
-     barrier — centroid values must be bitwise unchanged)
+     barrier — centroid values must be bitwise unchanged), and the
+     returned frame is already that checkpoint (the registry adds none)
 """
 
 from __future__ import annotations
@@ -28,6 +29,11 @@ def _assert_same(a, b):
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == b.count()
+
+
+def _assert_checkpoint_scan(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "Exchange" not in plan, plan
 
 
 def _lexical_topk_r11(documents, probe_pred, depth=20,
@@ -134,6 +140,7 @@ def test_build_ivf_det_checkpointed_loop_bitwise(embeddings):
     for _ in range(iters):
         ref = ann._det_centroids(ann.assign_ivf_det(v, ref), ref, block)
     _assert_same(cent, ref)
+    _assert_checkpoint_scan(cent)
 
 
 def test_pq_codebook_checkpointed_loop_bitwise(embeddings):
@@ -160,3 +167,4 @@ def test_pq_codebook_checkpointed_loop_bitwise(embeddings):
     for _ in range(iters):
         ref = pq._update_codebook(pq._assign_codes(sv, ref), ref, block)
     _assert_same(cb, ref)
+    _assert_checkpoint_scan(cb)

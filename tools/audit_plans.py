@@ -182,18 +182,9 @@ def audit_registry(spark, sf_dir: str, names=None) -> tuple[dict[str, list[str]]
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    from pyspark.sql import SparkSession
+    from vectordb_from_scratch_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("audit_plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("audit_plans")
 
     from vectordb_from_scratch_spark.plans.registry import QUERIES
 

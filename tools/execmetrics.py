@@ -15,18 +15,26 @@ pointed at the PLANNER instead of the request path.
 Mechanics: the driver-local UI status store exposes cumulative
 per-stage executor metrics at /api/v1/applications/{app}/stages. A
 snapshot sums them over all non-active stages; a cell's cost is the
-difference of two snapshots. The benches that use this must run with
-  spark.ui.enabled=true
-  spark.appStatusStore.diskStoreDir unset (in-memory store is fine)
-  spark.ui.retainedStages high enough that no stage of the measured
-  cell is evicted between its run and the AFTER snapshot (eviction
-  would deflate the cumulative sum; we set 100000 — stages are ~KB).
+difference of two snapshots. The benches that use this pass
+SESSION_CONF to build_session (spark.appStatusStore.diskStoreDir stays
+unset — the in-memory store is fine).
 """
 
 from __future__ import annotations
 
 import json
 import urllib.request
+
+# UI on for the status REST endpoint; stage retention high enough that no
+# stage of a measured cell is evicted before the AFTER snapshot (eviction
+# would deflate the cumulative sum — stages are ~KB). Task retention stays
+# tiny: stage-level sums are aggregated independently of per-task rows.
+SESSION_CONF = {
+    "spark.ui.enabled": "true",
+    "spark.ui.retainedStages": "100000",
+    "spark.ui.retainedJobs": "100000",
+    "spark.ui.retainedTasks": "100",
+}
 
 # REST field → short key. Executor-side metrics only (driver collects
 # are visible as tiny outputBytes, which is fine — we compare deltas).
@@ -46,8 +54,7 @@ def _stage_rows(spark) -> list[dict]:
     if not base:
         raise RuntimeError(
             "execmetrics needs the Spark UI status endpoint: start the "
-            "session with spark.ui.enabled=true (and a generous "
-            "spark.ui.retainedStages)"
+            "session with build_session(name, execmetrics.SESSION_CONF)"
         )
     app_id = spark.sparkContext.applicationId
     url = f"{base}/api/v1/applications/{app_id}/stages"

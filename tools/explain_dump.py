@@ -3,8 +3,8 @@ directory — the before/after plan evidence the optimization rounds
 commit under plans/r{N}/.
 
 Usage: python tools/explain_dump.py OUTDIR SUFFIX [--sf DIR] q1 q2 ...
-Writes OUTDIR/<query>_<SUFFIX>.txt per query. Runs at local[$SPARK_GRAFT_CPUS]
-with as many shuffle partitions (default 8), the bench's parallelism.
+Writes OUTDIR/<query>_<SUFFIX>.txt per query. Runs in the bench's session
+(session.build_session), so plans match the bench's parallelism.
 """
 
 from __future__ import annotations
@@ -24,22 +24,11 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from vectordb_from_scratch_spark.session import build_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("explain_dump")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "12g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("explain_dump")
 
-    from vectordb_from_scratch_spark.operators import cache, dedup
+    from bench import release
     from vectordb_from_scratch_spark.plans.registry import QUERIES
 
     os.makedirs(args.outdir, exist_ok=True)
@@ -52,8 +41,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — keep dumping the rest
             txt = f"ERROR building plan: {exc!r}\n"
         finally:
-            dedup.release_caches()
-            cache.sweep_persistent_rdds(spark, all_rdds=True)
+            release(spark)
         path = os.path.join(args.outdir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)

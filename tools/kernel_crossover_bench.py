@@ -27,6 +27,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import execmetrics as xm  # noqa: E402 — tools/ is the script dir
+
 LAST_EXEC: dict | None = None
 
 N_PROBES = 100
@@ -35,8 +37,6 @@ K = 10
 
 def _time(fn, runs: int) -> float:
     global LAST_EXEC
-    import execmetrics as xm
-
     sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
     return sec
 
@@ -48,27 +48,13 @@ def main() -> int:
     def want(name: str) -> bool:
         return only is None or any(s in name for s in only)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from vectordb_from_scratch_spark.operators import ann, knn
     from vectordb_from_scratch_spark.operators import pq as pqm
+    from vectordb_from_scratch_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("kernel_crossover_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("kernel_crossover_bench", xm.SESSION_CONF)
 
     def synth_emb(n: int):
         # deterministic 64-dim float vectors, fully JVM-side

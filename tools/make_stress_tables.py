@@ -24,20 +24,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> int:
     target = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from vectordb_from_scratch_spark.session import build_session
     from vectordb_from_scratch_spark.sources import load_table
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("make_stress_tables")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("make_stress_tables")
 
     emb = load_table(spark, SF_DIR, "embeddings")
     docs = load_table(spark, SF_DIR, "documents")

@@ -37,9 +37,9 @@ def main() -> int:
     compact_every = int(sys.argv[3]) if len(sys.argv) > 3 else 0
     n_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 64
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from vectordb_from_scratch_spark.session import build_session
     from vectordb_from_scratch_spark.streaming.neardup_stream import (
         compact_neardup_state,
         neardup_stream_foreach_batch,
@@ -50,18 +50,7 @@ def main() -> int:
     src = f"{WORK}/src"
     out, state, ckpt = f"{WORK}/out", f"{WORK}/state", f"{WORK}/ckpt"
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("neardup_stream_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("neardup_stream_bench")
 
     def fam_text(c):
         f = c.cast("string")

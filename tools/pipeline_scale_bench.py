@@ -31,6 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import execmetrics as xm  # noqa: E402 — tools/ is the script dir
+
 
 # metrics delta of the most recent _time() call's FIRST run — a
 # deterministic plan moves identical bytes every run, so one capture
@@ -41,8 +43,6 @@ LAST_EXEC: dict | None = None
 
 def _time(fn, runs: int) -> float:
     global LAST_EXEC
-    import execmetrics as xm
-
     sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
     return sec
 
@@ -56,31 +56,13 @@ def main() -> int:
     def want(name: str) -> bool:
         return only is None or any(sub in name for sub in only)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from vectordb_from_scratch_spark.operators.dedup import paragraph_dedup
     from vectordb_from_scratch_spark.operators.textops import url_domains
+    from vectordb_from_scratch_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("pipeline_scale_bench")
-        .config("spark.sql.shuffle.partitions", "64")
-        # UI on for the status REST endpoint (execmetrics); retention
-        # sized so no measured stage is evicted before the AFTER
-        # snapshot. Task retention stays tiny — stage-level sums are
-        # aggregated independently of per-task rows.
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("pipeline_scale_bench", xm.SESSION_CONF)
 
     sid = F.col("id").cast("string")
     docs = spark.range(n).select(

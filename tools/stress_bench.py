@@ -22,6 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import execmetrics as xm  # noqa: E402 — tools/ is the script dir
+
 BIG_EMB = "/tmp/big_embeddings"
 BIG_DOCS = "/tmp/big_docs"
 N_PROBES = 100
@@ -36,8 +38,6 @@ LAST_EXEC: dict | None = None
 
 def _time(fn, runs: int) -> float:
     global LAST_EXEC
-    import execmetrics as xm
-
     sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
     return sec
 
@@ -49,27 +49,12 @@ def main() -> int:
     def want(name: str) -> bool:
         return only is None or any(s in name for s in only)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from vectordb_from_scratch_spark.operators import ann, dedup, knn
+    from vectordb_from_scratch_spark.session import build_session, resolved_cpus
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        # UI on for the execmetrics REST snapshots (see tools/execmetrics)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("stress_bench", xm.SESSION_CONF)
 
     emb_path = BIG_EMB if os.path.isdir(BIG_EMB) else "/root/testdata/sf0.1/embeddings.parquet"
     docs_path = BIG_DOCS if os.path.isdir(BIG_DOCS) else "/root/testdata/sf0.1/documents.parquet"
@@ -1093,7 +1078,7 @@ def main() -> int:
                  lambda perm=perm: capped_window_run(perm))
 
     print(json.dumps({"metric": "stress_crossover", "n_emb": n_emb, "n_docs": n_docs,
-                      "cpus": int(cpus), "runs": runs, "cells": results}))
+                      "cpus": resolved_cpus(), "runs": runs, "cells": results}))
     return 0
 
 

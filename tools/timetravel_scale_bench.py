@@ -24,14 +24,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import execmetrics as xm  # noqa: E402 — tools/ is the script dir
+
 
 LAST_EXEC: dict | None = None  # exec-bytes of the last _time first run
 
 
 def _time(fn, runs: int) -> float:
     global LAST_EXEC
-    import execmetrics as xm
-
     sec, LAST_EXEC = xm.timed_with_metrics(fn, runs)
     return sec
 
@@ -62,25 +62,12 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from vectordb_from_scratch_spark.operators import crud
+    from vectordb_from_scratch_spark.session import build_session, resolved_cpus
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("timetravel_scale")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedTasks", "100")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("timetravel_scale", xm.SESSION_CONF)
 
     def sink(df):
         df.write.format("noop").mode("overwrite").save()
@@ -139,7 +126,7 @@ def main() -> int:
          lambda: sink(crud.fold_insert_log(log)))
 
     print(json.dumps({"metric": "timetravel_scale", "n_rows": n_real,
-                      "cpus": int(cpus), "runs": runs, "cells": results}))
+                      "cpus": resolved_cpus(), "runs": runs, "cells": results}))
     return 0
 
 

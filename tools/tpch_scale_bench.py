@@ -23,9 +23,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import execmetrics as xm  # noqa: E402 — tools/ is the script dir
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # TPCH_BENCH_DIR overrides the timed table set: point it at the sf0.1
@@ -54,30 +55,11 @@ def main() -> int:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     only = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from vectordb_from_scratch_spark.session import build_session
 
-    def mk_session():
-        s = (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("tpch_scale_bench")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.retainedStages", "100000")
-            .config("spark.ui.retainedJobs", "100000")
-            .config("spark.ui.retainedTasks", "100")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .getOrCreate()
-        )
-        s.sparkContext.setLogLevel("ERROR")
-        return s
-
-    spark = mk_session()
+    spark = build_session("tpch_scale_bench", xm.SESSION_CONF)
 
     from vectordb_from_scratch_spark.sources import load_table
 
@@ -120,9 +102,9 @@ def main() -> int:
         # 55 s vs 2.6 s clean-session) — restart the session so timings
         # never share a JVM with generation
         spark.stop()
-        spark = mk_session()
+        spark = build_session("tpch_scale_bench", xm.SESSION_CONF)
 
-    from vectordb_from_scratch_spark.operators import cache, dedup
+    from bench import run_once
     from vectordb_from_scratch_spark.plans.registry import QUERIES
     from vectordb_from_scratch_spark.sources import TABLES
 
@@ -149,25 +131,14 @@ def main() -> int:
     if only:  # comma-separated substrings, any-match
         subs = only.split(",")
         names = [n for n in names if any(sub in n for sub in subs)]
-    import execmetrics as xm
 
     timings: dict[str, float | str] = {}
     execs: dict[str, dict] = {}
     for name in names:
         try:
-            best = float("inf")
-            for _ in range(runs):
-                before = xm.snapshot(spark) if best == float("inf") else None
-                t0 = time.perf_counter()
-                QUERIES[name].spark(spark, DST).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                if before is not None:  # bytes captured on the first run
-                    execs[name] = xm.fmt(xm.delta(before, xm.snapshot(spark)))
-                dedup.release_caches()
-                cache.sweep_persistent_rdds(spark, all_rdds=True)
-            timings[name] = round(best, 3)
+            timings[name], execs[name] = xm.timed_with_metrics(
+                lambda: run_once(spark, DST, name), runs
+            )
         except Exception as exc:  # noqa: BLE001 — isolate per query
             timings[name] = f"ERR:{type(exc).__name__}"
         print(json.dumps({"query": name, "sec": timings[name],

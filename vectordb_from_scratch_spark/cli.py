@@ -27,17 +27,6 @@ from .operators.store import STORE_SCHEMA, VectorStore, VectorNotFound
 from .session import build_session
 
 
-def _session() -> SparkSession:
-    # the engine's reference configuration (AQE, Arrow, UTC, scan splits),
-    # sized down for CLI point operations
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
-    return build_session(
-        app_name="vectordb_cli",
-        master=f"local[{cpus}]",
-        shuffle_partitions=8,
-    )
-
-
 def _load(spark: SparkSession, data_dir: str, metric: str) -> VectorStore:
     path = os.path.join(data_dir, "data")
     try:
@@ -165,7 +154,7 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> int
     if args.cmd not in ("ingest-jsonl", "dedup", "fragments") and not args.data_dir:
         ap.error(f"--data-dir is required for the {args.cmd!r} command")
     own_session = spark is None
-    spark = spark or _session()
+    spark = spark or build_session("vectordb_cli")
     try:
         if args.cmd == "ingest-jsonl":
             from .sources.textio import jsonl_to_table

@@ -227,6 +227,22 @@ def _numpy_topk_kernel(probe_rows: list, k: int, metric: str) -> callable:
     return reduce
 
 
+def _resolve_strategy(
+    strategy: str, vectors: DataFrame, probes: DataFrame, to_row=tuple
+) -> tuple[str, list]:
+    """Resolve "auto" (numpy at AUTO_NUMPY_THRESHOLD rows and above) and,
+    for "numpy", collect the probe rows the kernel closes over. An empty
+    probe set falls back to "window": the kernels cannot be built over
+    zero probes (a shape-(0,) Q matrix, or np.concatenate([])), and the
+    window path returns the same empty result."""
+    if strategy == "auto":
+        strategy = "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
+    if strategy != "numpy":
+        return strategy, []
+    probe_rows = [to_row(r) for r in probes.collect()]
+    return ("numpy" if probe_rows else "window"), probe_rows
+
+
 def knn(
     vectors: DataFrame,
     queries: DataFrame,
@@ -273,16 +289,8 @@ def knn(
         F.col(id_col).alias("id"),
         vm.as_double(vec_col).alias("__vvec"),
     )
-    if strategy == "auto":
-        strategy = "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
-
+    strategy, probe_rows = _resolve_strategy(strategy, vectors, q)
     if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], r["__qvec"])
-            for r in queries.select(
-                F.col(query_id_col).alias("query_id"), vm.as_double(query_vec_col).alias("__qvec")
-            ).collect()
-        ]
         cand = v
         if exclude_self:
             # self rows are excluded post-kernel; keep k+1 margin
@@ -453,21 +461,7 @@ def radius_search(
     v = spread(vectors).select(
         F.col(id_col).alias("id"), vm.as_double(vec_col).alias("__vvec")
     )
-    if strategy == "auto":
-        strategy = "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
-    if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], r["__qvec"])
-            for r in queries.select(
-                F.col(query_id_col).alias("query_id"),
-                vm.as_double(query_vec_col).alias("__qvec"),
-            ).collect()
-        ]
-        if not probe_rows:
-            # np.array([]) is shape (0,): the kernel's (Q*Q).sum(axis=1)
-            # would raise AxisError — the window path returns the same
-            # (empty) result without building a kernel
-            strategy = "window"
+    strategy, probe_rows = _resolve_strategy(strategy, vectors, q)
     if strategy == "numpy":
         qid_t = queries.schema[query_id_col].dataType.simpleString()
         id_t = vectors.schema[id_col].dataType.simpleString()
@@ -571,24 +565,15 @@ def maxsim_search(
     v = spread(doc_vecs).select(
         F.col(id_col).alias("id"), vm.as_double(vec_col).alias("__vvec")
     )
-    if strategy == "auto":
-        strategy = (
-            "numpy" if estimated_rows(doc_vecs) >= AUTO_NUMPY_THRESHOLD else "window"
-        )
-    if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], r["__qidx"], r["__qvec"])
-            for r in query_vecs.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_idx_col).alias("__qidx"),
-                vm.as_double(query_vec_col).alias("__qvec"),
-            ).collect()
-        ]
-        if not probe_rows:
-            # empty probe set would give the kernel a shape-(0,) Q matrix
-            # (AxisError in (Q*Q).sum(axis=1)); the window path yields the
-            # same empty result safely
-            strategy = "window"
+    strategy, probe_rows = _resolve_strategy(
+        strategy,
+        doc_vecs,
+        query_vecs.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_idx_col).alias("__qidx"),
+            vm.as_double(query_vec_col).alias("__qvec"),
+        ),
+    )
     if strategy == "numpy":
         qid_t = query_vecs.schema[query_id_col].dataType.simpleString()
         qidx_t = query_vecs.schema[query_idx_col].dataType.simpleString()
@@ -718,15 +703,10 @@ def knn_hamming(
         F.col(query_id_col).alias("query_id"),
         *[F.col(c).alias(f"__qw{i}") for i, c in enumerate(query_word_cols)],
     )
-    if strategy == "auto":
-        strategy = (
-            "numpy" if estimated_rows(vectors) >= AUTO_NUMPY_THRESHOLD else "window"
-        )
+    strategy, probe_rows = _resolve_strategy(
+        strategy, vectors, q, lambda r: (r[0], list(r[1:]))
+    )
     if strategy == "numpy":
-        probe_rows = [
-            (r["query_id"], [r[f"__qw{i}"] for i in range(len(query_word_cols))])
-            for r in q.collect()
-        ]
         kernel = _numpy_hamming_kernel(probe_rows, fetch)
         qid_t = queries.schema[query_id_col].dataType.simpleString()
         id_t = vectors.schema[id_col].dataType.simpleString()

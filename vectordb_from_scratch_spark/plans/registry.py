@@ -2126,9 +2126,9 @@ def _q_ivf_det_centroids(spark, sf_dir):
 )
 def _q_ivf_det_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2180,9 +2180,9 @@ def _q_ivf_det_knn(spark, sf_dir):
 )
 def _q_ivf_filtered_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2262,17 +2262,13 @@ def _q_ivf_sq8_knn(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    # cent feeds the assignment AND the probe-routing broadcast; assigned
-    # feeds BOTH the code index and the raw re-rank side. Without the
-    # persists the unrolled det-IVF build would re-execute once per
-    # consuming branch in one plan (in production index+centroids are
-    # written tables — this is the session-local stand-in, released per
-    # query by release_caches)
-    # tiny (n_lists rows) and multiply-consumed: checkpoint truncates the
-    # Lloyd-build lineage out of every consumer plan (r12)
-    cent = cache.checkpoint(ann.build_ivf_det(
+    # assigned feeds BOTH the code index and the raw re-rank side; the
+    # persist runs the assignment once per query, not once per consuming
+    # branch (in production the index is a written table — this is the
+    # session-local stand-in, released per query by release_caches)
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2437,12 +2433,11 @@ def _q_pq_adc_knn(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    # codebook feeds encode AND the per-query LUT; codes feed the scan —
-    # persist both so the det-Lloyd build runs once per query, not once
-    # per consuming branch (released per query by release_caches)
-    cb = cache.checkpoint(pq.pq_codebook(
+    # codes feed the scan — persist them so the encode runs once per
+    # query, not once per consuming branch (released by release_caches)
+    cb = pq.pq_codebook(
         e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"], block=_PQ["block"],
-    ))
+    )
     codes = track(pq.pq_encode(e, cb, _PQ["m"], _PQ["d_sub"]))
     probes = _probes(spark, sf_dir, F.col("vec_id") < 5)
     res = pq.pq_adc_topk(codes, cb, probes, k=_PQ["k"], ks=_PQ["ks"], d_sub=_PQ["d_sub"])
@@ -2505,9 +2500,9 @@ def _q_knn_pq_recall(spark, sf_dir):
     from ..operators.cache import track
 
     e = _t(spark, sf_dir, "embeddings")
-    cb = cache.checkpoint(pq.pq_codebook(
+    cb = pq.pq_codebook(
         e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"], block=_PQ["block"],
-    ))
+    )
     codes = track(pq.pq_encode(e, cb, _PQ["m"], _PQ["d_sub"]))
     probes = _probes(spark, sf_dir, F.col("vec_id") < 20)
     k = _PQ["k"]
@@ -2601,20 +2596,18 @@ def _q_ivf_pq_knn(spark, sf_dir):
     # 8/512-group aggregations leave idle (guide §2.6 "overlap
     # independent jobs"). Results are unchanged: each chain is the
     # identical deterministic build, just scheduled concurrently.
-    # Each table is tiny (n_lists / m·ks rows) and multiply-consumed:
-    # the checkpoint truncates the build lineage out of every consumer.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_cent = pool.submit(
-            lambda: cache.checkpoint(ann.build_ivf_det(
+            lambda: ann.build_ivf_det(
                 e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"],
                 block=_IVF_DET["block"],
-            ))
+            )
         )
         f_cb = pool.submit(
-            lambda: cache.checkpoint(pq.pq_codebook(
+            lambda: pq.pq_codebook(
                 e, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
                 block=_PQ["block"],
-            ))
+            )
         )
         cent, cb = f_cent.result(), f_cb.result()
     # spread the shallow source once; assign_ivf_det no longer spreads
@@ -2718,14 +2711,14 @@ def _q_ivf_pq_res_knn(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     # The three build artifacts (centroids, assignment, residual
     # codebook) each feed 2-3 consumers AND nest (codebook ⊃ residuals
-    # ⊃ assignment ⊃ centroids) — localCheckpoint materializes each
-    # once and truncates the nested lineage (the tracked-persist form
-    # printed the unrolled Lloyd build 500+ exchanges deep). In
-    # production these are written index tables; the checkpoint is the
-    # session-local stand-in.
+    # ⊃ assignment ⊃ centroids). The builders return checkpointed
+    # frames; the assignment is checkpointed here, which truncates the
+    # nested lineage (the tracked-persist form printed the unrolled
+    # Lloyd build 500+ exchanges deep). In production these are written
+    # index tables; the checkpoint is the session-local stand-in.
     cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ).transform(cache.checkpoint)
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -2737,7 +2730,7 @@ def _q_ivf_pq_res_knn(spark, sf_dir):
     cb = pq.pq_codebook(
         res, m=_PQ["m"], ks=_PQ["ks"], dim=64, iters=_PQ["iters"],
         block=_PQ["block"], id_col="id", vec_col="rvec",
-    ).transform(cache.checkpoint)
+    )
     idx = pq.ivf_pq_residual_index(
         assigned, cent, cb, _PQ["m"], _PQ["d_sub"], id_col="id", vec_col="vec"
     )
@@ -2788,17 +2781,10 @@ _SEMDEDUP_MIN_SIM = 0.35
     "dedup_components tail; value-exact incl. the clustering)",
 )
 def _q_dedup_semantic(spark, sf_dir):
-    from ..operators.cache import track
-
     e = _t(spark, sf_dir, "embeddings")
-    # checkpoint (not persist): the 8-row centroid table is referenced by
-    # the assignment, the pair join's BOTH sides and the join-back — the
-    # persisted form reprinted (and re-planned) the whole Lloyd build
-    # under each consumer; the checkpoint truncates it to an 8-row
-    # LogicalRDD (r12, same device as ann_ivf_pq_res_knn)
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     res = dedup.semantic_dedup(e, cent, min_sim=_SEMDEDUP_MIN_SIM)
     return res.select(
         F.col("id").alias("vec_id"), "component", "cluster_size", "is_kept"
@@ -2986,9 +2972,9 @@ def _q_ivf_recall_curve(spark, sf_dir):
         "query_id", "id"
     )
     np_df = probes.agg(F.count(F.lit(1)).alias("__np"))
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -4336,14 +4322,10 @@ _IDCG_10 = sum(
     "composes with any search path's (query_id, id, rank) output)",
 )
 def _q_eval_ann_ndcg(spark, sf_dir):
-    from ..operators.cache import track
-
     e = _t(spark, sf_dir, "embeddings")
-    # tiny (n_lists rows) and multiply-consumed: checkpoint truncates the
-    # Lloyd-build lineage out of every consumer plan (r12)
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"],
-    ))
+    )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
     v = spread(e).select(
@@ -5651,9 +5633,9 @@ def _q_tpch_q22(spark, sf_dir):
 )
 def _q_pipeline_cluster_sample(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    cent = cache.checkpoint(ann.build_ivf_det(
+    cent = ann.build_ivf_det(
         e, n_lists=_IVF_DET["n_lists"], iters=_IVF_DET["iters"], block=_IVF_DET["block"]
-    ))
+    )
     v = spread(e).select(F.col("vec_id").cast("long").alias("id"), vm.as_double("embedding").alias("vec"))
     assigned = ann.assign_ivf_det(v, cent)
     picked = sampling.cluster_sample(
@@ -7753,13 +7735,8 @@ def _q_upsert_time_travel(spark, sf_dir):
 def _q_outlier_scores(spark, sf_dir):
     p = _IVF_DET
     e = _t(spark, sf_dir, "embeddings")
-    # the n_lists-row centroid frame feeds both the assignment and the
-    # distance join; checkpoint it so the Lloyd build runs once and its
-    # per-iteration exchanges drop out of the serving plan
-    cent = cache.checkpoint(
-        ann.build_ivf_det(
-            e, n_lists=p["n_lists"], iters=p["iters"], block=p["block"]
-        )
+    cent = ann.build_ivf_det(
+        e, n_lists=p["n_lists"], iters=p["iters"], block=p["block"]
     )
     # spread the shallow source once; assign_ivf_det no longer spreads
     # internally (VERDICT r11 #2) and the whole chain inherits this
